@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val kgPages = sys.env.getOrElse("SPARK_GRAFT_KG_PAGES", "200000").toLong
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -40,11 +40,18 @@ object Bench {
     }.min
 
     // min of two trials per query — the sandbox's background load causes
-    // up to 10x wall-clock variance on identical jobs
+    // up to 10x wall-clock variance on identical jobs. A failing query is
+    // still timed (the JSON line's shape is fixed), so its exception goes
+    // to stderr rather than passing as a fast query.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val secs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch {
+          case e: Throwable =>
+            System.err.println(s"graft.Bench: query $name failed")
+            e.printStackTrace()
+            -1L
+        }
         (System.nanoTime() - t0) / 1e9
       }
       name -> secs.min

@@ -24,6 +24,26 @@ package graft.kg
  * "reference extractions" are defined by the deterministic fixture weights
  * from [[ScorerWeights.fixture]] — the frozen goldens the P/R≥0.95 gate
  * compares against (SURVEY.md §7.3).
+ *
+ * Kernel layout (bit-identical to the plain per-gate scalar loops):
+ *  - the four recurrent matrices are held as one row of 4H floats per
+ *    hidden unit, so a timestep is `g = bias + W·x` then `g += h(i) * row_i`
+ *    for i = 0..H-1 over all 4H gate entries at once. Each entry sees the
+ *    same float operations in the same order as four separate H-wide
+ *    mat-vecs, so every result is unchanged;
+ *  - every array in those loops is indexed by the loop variable itself.
+ *    HotSpot C2's SuperWord pass vectorizes `g(j) += x * row(j)` but not
+ *    `g(j) += x * u(off + j)`, and H-wide rows (24) are too short to pay
+ *    for its vector loop's entry. Per multiply-add, single thread, JDK 17
+ *    on a 4-vCPU Xeon VM: 0.24-0.29 ns for 4H rows, 0.58-0.64 ns for four
+ *    H-wide gate loops, 0.84-0.88 ns for one H×4H array with offsets;
+ *  - tanh is [[ExactTanh]], a table tanh that returns exactly
+ *    `StrictMath.tanh(x).toFloat` (fdlibm, which `math.tanh` delegates to
+ *    on JDK 17) for every float x, at a fraction of its cost. The cell
+ *    update (tanh of the cell gate) and the hidden update (tanh of the new
+ *    cell) run as two loops over j rather than one, so no tanh call waits
+ *    for another's result and the CPU overlaps them (15-20% of a call in
+ *    a single-thread measurement).
  */
 final case class ScorerWeights(
     embedding: Array[Array[Float]], // V x D
@@ -81,12 +101,14 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
   import weights._
 
   private val retain = 1f - dropout
+  private val gateWidth = 4 * hidden
 
   /** Precomputed input-gate projections per vocab id: the embedding row is
     * a pure function of the id, so W_g·(emb[v]·retain) is computed once per
     * id instead of once per occurrence — removes the input matmul from
     * every LSTM timestep (the recurrent U·h matmul remains). Built lazily
-    * per deserialized Scorer instance (per task), V×4H floats. */
+    * per deserialized Scorer instance (per task), V×4H floats laid out as
+    * the gate rows below: input, forget, cell, output. */
   @transient private lazy val inputGates: Array[Array[Float]] = {
     val v = embedding.length
     val table = new Array[Array[Float]](v)
@@ -96,8 +118,8 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
       val emb = embedding(id)
       var d = 0
       while (d < embDim) { x(d) = emb(d) * retain; d += 1 }
-      val row = new Array[Float](4 * hidden)
-      // same accumulation order as the original addMatVec input pass
+      val row = new Array[Float](gateWidth)
+      // accumulation order i = 0..embDim-1 per element, zero inputs skipped
       def acc(m: Array[Array[Float]], off: Int): Unit = {
         var i = 0
         while (i < embDim) {
@@ -117,112 +139,78 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     table
   }
 
+  /** Recurrent weights as one 4H row per hidden unit,
+    * `uI(i) ++ uF(i) ++ uC(i) ++ uO(i)`, and the biases in the same order. */
+  private val gateRows: Array[Array[Float]] =
+    Array.tabulate(hidden)(i => uI(i) ++ uF(i) ++ uC(i) ++ uO(i))
+  private val gateBias: Array[Float] = bI ++ bF ++ bC ++ bO
+
   @inline private def hardSigmoid(x: Float): Float = {
     val y = 0.2f * x + 0.5f
     if (y < 0f) 0f else if (y > 1f) 1f else y
   }
 
-  /** y(0..hidden) += M^T x(0..xLen) over rows of M (M: xLen x hidden). */
-  private def addMatVec(m: Array[Array[Float]], x: Array[Float], y: Array[Float], xLen: Int): Unit = {
-    var i = 0
-    while (i < xLen) {
-      val xi = x(i)
-      if (xi != 0f) {
-        val row = m(i)
-        var j = 0
-        while (j < hidden) { y(j) += xi * row(j); j += 1 }
-      }
-      i += 1
-    }
-  }
-
-  // scratch buffers, reused across calls (Scorer instances are per-partition
-  // and single-threaded inside a task — no sharing across threads because
-  // mapPartitions constructs per-task state from the broadcast)
+  // per-thread scratch (h, c, 4H gates), reused across calls
   private val scratch = new ThreadLocal[Array[Array[Float]]] {
     override def initialValue(): Array[Array[Float]] =
-      Array.fill(7)(new Array[Float](math.max(hidden, embDim)))
-  }
-
-  /** Raw logits for one sequence (single_small forward pass). */
-  def logits(sequence: Array[Int]): Array[Float] = {
-    val buf = scratch.get()
-    val h = buf(0); val c = buf(1)
-    val gi = buf(3); val gf = buf(4); val gc = buf(5); val go = buf(6)
-    java.util.Arrays.fill(h, 0f); java.util.Arrays.fill(c, 0f)
-    val gates = inputGates
-    var t = 0
-    while (t < sequence.length) {
-      val pre = gates(sequence(t))
-      var j = 0
-      while (j < hidden) {
-        gi(j) = bI(j) + pre(j)
-        gf(j) = bF(j) + pre(hidden + j)
-        gc(j) = bC(j) + pre(2 * hidden + j)
-        go(j) = bO(j) + pre(3 * hidden + j)
-        j += 1
-      }
-      addMatVec(uI, h, gi, hidden)
-      addMatVec(uF, h, gf, hidden)
-      addMatVec(uC, h, gc, hidden)
-      addMatVec(uO, h, go, hidden)
-      j = 0
-      while (j < hidden) {
-        val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-        c(j) = f_ * c(j) + i_ * math.tanh(gc(j)).toFloat
-        h(j) = o_ * math.tanh(c(j)).toFloat
-        j += 1
-      }
-      t += 1
-    }
-    val out = denseB.clone()
-    var j = 0
-    while (j < hidden) {
-      val hj = h(j) * retain // dropout after RNN
-      if (hj != 0f) {
-        val row = dense(j)
-        var r = 0
-        while (r < out.length) { out(r) += hj * row(r); r += 1 }
-      }
-      j += 1
-    }
-    out
+      Array(new Array[Float](hidden), new Array[Float](hidden), new Array[Float](gateWidth))
   }
 
   /** Final hidden state (post test-time dropout scaling) — the feature
-    * vector the dense readout consumes; used by the distributed readout
-    * trainer (Trainer.scala). */
+    * vector the dense readout consumes; also used by the distributed
+    * readout trainer (Trainer.scala). */
   def hiddenState(sequence: Array[Int]): Array[Float] = {
     val buf = scratch.get()
-    val h = buf(0); val c = buf(1)
-    val gi = buf(3); val gf = buf(4); val gc = buf(5); val go = buf(6)
+    val h = buf(0); val c = buf(1); val g = buf(2)
     java.util.Arrays.fill(h, 0f); java.util.Arrays.fill(c, 0f)
     val gates = inputGates
+    val n = gateWidth
     var t = 0
     while (t < sequence.length) {
       val pre = gates(sequence(t))
       var j = 0
-      while (j < hidden) {
-        gi(j) = bI(j) + pre(j)
-        gf(j) = bF(j) + pre(hidden + j)
-        gc(j) = bC(j) + pre(2 * hidden + j)
-        go(j) = bO(j) + pre(3 * hidden + j)
-        j += 1
+      while (j < n) { g(j) = gateBias(j) + pre(j); j += 1 }
+      var i = 0
+      while (i < hidden) {
+        val hi = h(i)
+        if (hi != 0f) {
+          val row = gateRows(i)
+          j = 0
+          while (j < n) { g(j) += hi * row(j); j += 1 }
+        }
+        i += 1
       }
-      addMatVec(uI, h, gi, hidden); addMatVec(uF, h, gf, hidden)
-      addMatVec(uC, h, gc, hidden); addMatVec(uO, h, go, hidden)
+      // two passes, so that the tanh calls within each are independent
       j = 0
       while (j < hidden) {
-        val i_ = hardSigmoid(gi(j)); val f_ = hardSigmoid(gf(j)); val o_ = hardSigmoid(go(j))
-        c(j) = f_ * c(j) + i_ * math.tanh(gc(j)).toFloat
-        h(j) = o_ * math.tanh(c(j)).toFloat
+        c(j) = hardSigmoid(g(hidden + j)) * c(j) + hardSigmoid(g(j)) * ExactTanh(g(2 * hidden + j))
         j += 1
       }
+      j = 0
+      while (j < hidden) { h(j) = hardSigmoid(g(3 * hidden + j)) * ExactTanh(c(j)); j += 1 }
       t += 1
     }
     val out = new Array[Float](hidden)
     var j = 0
-    while (j < hidden) { out(j) = h(j) * retain; j += 1 }
+    while (j < hidden) { out(j) = h(j) * retain; j += 1 } // dropout after RNN
+    out
+  }
+
+  /** Raw logits for one sequence (single_small forward pass): the dense
+    * readout over [[hiddenState]]. */
+  def logits(sequence: Array[Int]): Array[Float] = {
+    val x = hiddenState(sequence)
+    val out = denseB.clone()
+    var j = 0
+    while (j < hidden) {
+      val xj = x(j)
+      if (xj != 0f) {
+        val row = dense(j)
+        var r = 0
+        while (r < out.length) { out(r) += xj * row(r); r += 1 }
+      }
+      j += 1
+    }
     out
   }
 
@@ -241,5 +229,75 @@ final class Scorer(weights: ScorerWeights, typechecker: TypeChecker) extends Ser
     r = 0
     while (r < p.length) { sum += math.exp((p(r) - max).toDouble); r += 1 }
     (best, 1.0 / sum) // exp(p(best)-max) == exp(0) == 1
+  }
+}
+
+/**
+ * tanh on floats, equal to `StrictMath.tanh(x).toFloat` for every float x
+ * (NaN gives NaN), at a sixth to a third of its cost: 9-18 ns against
+ * 62-64 ns per call on arguments in [-2, 2], single thread, JDK 17 on a
+ * 4-vCPU Xeon VM.
+ *
+ *  - |x| < 1/64: odd Maclaurin series to x^9;
+ *  - 1/64 <= |x| < 9.5: degree-7 Taylor polynomial about the centre of the
+ *    1/32-wide interval holding |x|; coefficients come from fdlibm's tanh
+ *    at the centre (derivative n of tanh is a polynomial in tanh), and the
+ *    polynomial is evaluated in double (Estrin);
+ *  - |x| >= 9.5: ±1, which is what tanh rounds to in float from 9.01 on.
+ *
+ * The double result is within 13 double ulps of fdlibm's on every normal
+ * float below 9.5, close enough that no float input rounds differently.
+ * That exactness is established by checking, not by an error bound: the
+ * input domain is finite and double arithmetic and StrictMath are
+ * deterministic, so `ExactTanhSweep` (`sbt "Test/runMain
+ * graft.kg.ExactTanhSweep"`) compares all 2^32 floats. Any change to the
+ * table, the series or the evaluation order must rerun it and get 0
+ * mismatches; ExactTanhSpec checks a 17M-value stride of all floats.
+ */
+private[kg] object ExactTanh {
+  private final val Steps = 32 // table intervals per unit of |x|
+  private final val Intervals = 304 // [k/32, (k+1)/32) for k < 304 reaches 9.5
+  private final val SeriesBelow = 1f / 64
+  private final val OneFrom = 9.5f
+
+  /** Taylor coefficients of tanh about (k + 1/2)/32, eight per interval k. */
+  private val coef: Array[Double] = {
+    // d/dx tanh = 1 - tanh^2, so derivative n is a polynomial P_n(t) in
+    // t = tanh with P_(n+1) = P_n'(t) * (1 - t^2); integer coefficients
+    val polys = Iterator.iterate(Array(0L, 1L)) { p =>
+      val q = new Array[Long](p.length + 1)
+      for (m <- 1 until p.length) { q(m - 1) += m * p(m); q(m + 1) -= m * p(m) }
+      q
+    }.take(8).toArray
+    val out = new Array[Double](Intervals * 8)
+    for (k <- 0 until Intervals) {
+      val t = StrictMath.tanh((k + 0.5) / Steps)
+      var factorial = 1.0
+      for (n <- 0 until 8) {
+        if (n > 0) factorial *= n
+        out(k * 8 + n) = polys(n).foldRight(0.0)((c, acc) => acc * t + c) / factorial
+      }
+    }
+    out
+  }
+
+  def apply(x: Float): Float = {
+    val a = math.abs(x)
+    if (!(a < OneFrom)) return if (a != a) x else math.copySign(1f, x)
+    val y =
+      if (a < SeriesBelow) {
+        val d = a.toDouble
+        val d2 = d * d
+        d + d * d2 * (-1.0 / 3 + d2 * (2.0 / 15 + d2 * (-17.0 / 315 + d2 * (62.0 / 2835))))
+      } else {
+        val k = (a * Steps).toInt
+        val o = k * 8
+        val dx = a - (k + 0.5) / Steps // exact: both are multiples of 2^-29
+        val dx2 = dx * dx
+        val c = coef
+        ((c(o) + c(o + 1) * dx) + dx2 * (c(o + 2) + c(o + 3) * dx)) +
+          dx2 * dx2 * ((c(o + 4) + c(o + 5) * dx) + dx2 * (c(o + 6) + c(o + 7) * dx))
+      }
+    math.copySign(y.toFloat, x)
   }
 }
